@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels.encoding import decode_bytes
+from ..worker import bootstrap_worker
 
 _DECODED_SCHEMA = T.StructType([
     T.StructField("text", T.StringType(), False),
@@ -28,6 +29,7 @@ _DECODED_SCHEMA = T.StructType([
 
 @pandas_udf(_DECODED_SCHEMA)
 def _decode_udf(raw: pd.Series) -> pd.DataFrame:
+    bootstrap_worker()
     rows = [decode_bytes(b) for b in raw]
     return pd.DataFrame(
         rows, columns=["text", "encoding", "encoding_confidence"])

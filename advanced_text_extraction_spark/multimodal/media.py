@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import bootstrap_worker
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),      # image|audio|video
@@ -101,6 +103,7 @@ def synth_media(spark: SparkSession, n: int = 256,
     """Deterministic media table: media_id i gets kind i%3; pixel/sample
     bytes derive from (i, position) arithmetic — reproducible anywhere."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for i in pdf["id"]:
@@ -157,6 +160,7 @@ def image_stats(df: DataFrame, codec: str = "fake") -> DataFrame:
     decode = IMAGE_CODECS[codec]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -189,6 +193,7 @@ def resize_images(df: DataFrame, scale: int = 2,
     decode = IMAGE_CODECS[codec]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -225,6 +230,7 @@ def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
     exploding schema has no room for error rows, so callers needing
     error surfacing run image_stats-style operators first."""
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -264,6 +270,7 @@ def frame_stats(df: DataFrame, every: int = 2) -> DataFrame:
     frames = sample_frames(df, every)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for mid, fidx, frame in zip(pdf["media_id"], pdf["frame_idx"],
@@ -292,6 +299,7 @@ def audio_stats(df: DataFrame) -> DataFrame:
     silent-wrong-data trap), and degenerate headers (sr=0, no samples)
     are skipped rather than dividing by zero and failing the task."""
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

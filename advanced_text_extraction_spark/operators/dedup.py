@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import bootstrap_worker
+
 
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup via content hash (reference md5 file-hash analog,
@@ -70,6 +72,7 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str,
     ])
 
     def kernel(batches):
+        bootstrap_worker()
         for pdf in batches:
             ids, outs = [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
@@ -164,6 +167,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     ])
 
     def kernel(batches):
+        bootstrap_worker()
         cache: dict = {}  # shingle → digest tuple, partition-scoped
         for pdf in batches:
             ids, perms, mins = [], [], []
@@ -192,6 +196,7 @@ def lsh_band_keys(df: DataFrame, id_col: str, text_col: str,
     n_bands = n_perms // rows_per_band
 
     def kernel(batches):
+        bootstrap_worker()
         cache: dict = {}  # shingle → digest tuple, partition-scoped
         for pdf in batches:
             ids, bands, keys = [], [], []
@@ -355,6 +360,7 @@ def simhash_sketch(df: DataFrame, id_col: str, text_col: str,
     out_bits = np.arange(n_bits, dtype=np.int64)
 
     def kernel(batches):
+        bootstrap_worker()
         cache: dict[str, int] = {}
         for pdf in batches:
             ids, sims = [], []

@@ -29,6 +29,7 @@ from ..kernels.normalize import normalize_plain
 from ..kernels.office_extract import extract_office
 from ..kernels.pdf_extract import extract_pdf
 from ..kernels.sniff import sniff_content_type
+from ..worker import bootstrap_worker
 
 EXTRACTOR_VERSION = "ate-spark/0.1"
 MAX_PAYLOAD_CHARS = 2_000_000
@@ -216,6 +217,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     corpus must not report 30% fewer input rows)."""
 
     def _extract_batches(batches):
+        bootstrap_worker()
         # Arm the P3 OCR hook IN THIS PROCESS: the kernel runs in Spark's
         # Python workers, so a driver-side install_pdf_ocr_fallback()
         # call would only set the driver's module global. The engine name

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from ..kernels.image_codec import decode_image, decode_raw_gray
 from ..kernels.ocr import normalize_to_charset, ocr_image, render_page
 from ..kernels.pdf_extract import extract_page_images
+from ..worker import bootstrap_worker
 from . import extract as extract_mod
 
 OCR_SCHEMA = T.StructType([
@@ -54,6 +55,7 @@ def ocr_images(df: DataFrame, id_col: str = "media_id",
     status='error' rows — a row never kills the job."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -164,6 +166,7 @@ def pdf_ocr_pages(df: DataFrame, id_col: str = "doc_id",
     operator; page rows feed the A7 aggregation)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for did, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -243,6 +246,7 @@ def ocr_roundtrip(docs: DataFrame, text_col: str = "text",
     strings — the driver-level correctness gate for the OCR tier."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bootstrap_worker()
         for pdf in batches:
             rows = []
             for did, text in zip(pdf["doc_id"], pdf[text_col]):

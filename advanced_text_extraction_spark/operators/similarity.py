@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import bootstrap_worker
+
 _EPS = 1e-12
 
 
@@ -243,6 +245,7 @@ def _kmeans_partials(df: DataFrame, centroids: list[list[float]],
     dim = C.shape[1]
 
     def partials(batches):
+        bootstrap_worker()
         import pandas as pd
         for pdf in batches:
             if not len(pdf):
@@ -398,6 +401,7 @@ def ivf_assign_kernel(df: DataFrame, centroids: list[list[float]],
     ) + ", cell int"
 
     def assign(batches):
+        bootstrap_worker()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import char_count, line_count, word_count
 from ..kernels.lang import BOOSTS, SCRIPTS, STOPWORDS
+from ..worker import bootstrap_worker
 
 
 def script_char_class(ranges: tuple[tuple[int, int], ...]) -> str:
@@ -144,6 +145,7 @@ def lang_id_kernel(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     @pandas_udf("string")
     def _detect(texts: pd.Series) -> pd.Series:
+        bootstrap_worker()
         return texts.fillna("").map(detect_language)
 
     return df.select(F.col(id_col),
@@ -175,6 +177,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     ])
 
     def kernel(batches):
+        bootstrap_worker()
         for pdf in batches:
             ids, ns, mins, maxs = [], [], [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):

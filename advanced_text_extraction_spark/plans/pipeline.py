@@ -3,7 +3,8 @@
     scan(transcripts)                         [column-pruned parquet scan]
       → part_bucket = pmod(xxhash64(conv_id), n_buckets)
       → resume skip of completed buckets      [J1 — lineage probe]
-      → Exchange(hash: part_bucket, salt)     [C4 — skew break; co-locates
+      → Exchange(hash: part_bucket, salt)     [C4 — width sized from the
+                                               input; co-locates
                                                (conv_id, turn_idx) copies]
       → mapInPandas(dedupe + extract)         [U1 folded into the kernel —
                                                partition-local seen-set,
@@ -16,20 +17,29 @@ Scale design notes (10^12 turns, 1000 executors):
 - The ONLY shuffle is the salted repartition; everything else is
   narrow. No collect of data rows ever happens (lineage bucket ids are
   O(n_buckets) — metadata, not data).
-- Salting: a conversation with 10^9 turns would pin one task if we
-  partitioned by conv_id alone; hashing (part_bucket, salt(turn_idx))
-  caps any task at ~|bucket|/salt rows (reference has no analog — its
-  ThreadPoolExecutor fans out per file, text_extractor.py:962-1000).
+- Exchange width follows the input: one task per TASK_TARGET_BYTES of
+  scan, in whole waves of defaultParallelism tasks, at most
+  n_buckets × salt. Every Python task pays a fixed start-up on top of
+  its kernels, so a small input must not fan out to n_buckets × salt
+  mostly-empty tasks.
+- Salting is skew insurance only: a conversation with 10^9 turns would
+  pin one task if we partitioned by conv_id alone; hashing
+  (part_bucket, salt(turn_idx)) spreads one bucket over up to salt
+  tasks once the input is large enough to fill them (reference has no
+  analog — its ThreadPoolExecutor fans out per file,
+  text_extractor.py:962-1000).
 - Lineage granularity = bucket; failed/killed runs redo only missing
   buckets, and the dynamic partition overwrite makes redo idempotent
   (no dupes on retry) — the reference's md5 cache-hit short-circuit
-  (text_extractor.py:842-847) lifted to partition granularity.
+  (text_extractor.py:842-847) lifted to partition granularity. The
+  exchange width never enters the bucket keying or the output layout.
 - Writes are per-bucket parquet dirs → on Iceberg, per-partition
   commits; bucket count scales with cluster size, not data size.
 """
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass
 
@@ -45,6 +55,13 @@ from ..sources import catalog
 
 DEFAULT_N_BUCKETS = 32
 DEFAULT_SALT = 4
+# Scan bytes one extract task should receive. Each Python task pays a
+# fixed start-up (worker init, Arrow framing) on top of its kernels, so
+# fewer, larger tasks cost less; but all of a task's rows pass through
+# one Python worker, whose peak memory grows with the task. On a 4-core
+# host 512 KiB gives 5k chat turns (1.5 MB of parquet) one task per
+# core, and ~270 large documents (7 MB) four tasks per core.
+TASK_TARGET_BYTES = 512 * 1024
 
 
 @dataclass
@@ -66,6 +83,7 @@ class RunStats:
     buckets_skipped: list[int]
     input_rows: int
     wall_sec: float
+    extract_tasks: int  # width of the salted exchange (exchange_width)
 
 
 def prepare(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
@@ -81,14 +99,38 @@ def prepare(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     )
 
 
-def salted_repartition(df: DataFrame, n_buckets: int, salt: int) -> DataFrame:
-    """C4 — break long-conversation skew before the extraction UDF.
+def exchange_width(df: DataFrame, n_buckets: int, salt: int) -> int:
+    """Partition count of the salted exchange for the input ``df``:
+    ``ceil(bytes / TASK_TARGET_BYTES)`` rounded up to whole waves of
+    ``defaultParallelism`` tasks, then clamped to
+    ``[defaultParallelism, n_buckets × salt]``, the cap winning.
 
-    Hash layout on (part_bucket, salt(turn_idx)): rows of one bucket land
-    in ≤ salt tasks, each Arrow-batch-sized; order is restored after the
-    UDF (W3), so the shuffle is free to optimize for evenness."""
+    ``bytes`` is Catalyst's size estimate of ``df``'s optimized plan (the
+    file sizes for a parquet scan); a source with no estimate reports
+    Long.MaxValue and gets the cap. The width is an explicit partition
+    count because AQE never coalesces a repartition by number, while a
+    column-only repartition can be coalesced down to a single task."""
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+    floor = df.sparkSession.sparkContext.defaultParallelism
+    tasks = math.ceil(size / TASK_TARGET_BYTES / floor) * floor
+    return min(n_buckets * salt, max(floor, tasks))
+
+
+def salted_repartition(df: DataFrame, n_buckets: int, salt: int,
+                       width: int | None = None) -> DataFrame:
+    """C4 — hash exchange in front of the extraction UDF.
+
+    Hashes on (part_bucket, salt(turn_idx)) into ``width`` partitions
+    (default :func:`exchange_width`, which follows the input size). All
+    copies of a (conv_id, turn_idx) key share both hash columns, so they
+    land in one partition at any width and the folded dedupe stays exact.
+    Salt is skew insurance: a bucket's rows can spread over up to
+    ``salt`` tasks once the input is large enough to fill them. Order is
+    restored after the UDF (W3), so the shuffle is free to optimize for
+    evenness."""
     return df.repartition(
-        n_buckets * salt,
+        width or exchange_width(df, n_buckets, salt),
         "part_bucket",
         F.pmod(F.xxhash64("turn_idx"), F.lit(salt)),
     )
@@ -127,7 +169,8 @@ def run_extract_job(
     if only_buckets is not None:
         df = df.filter(F.col("part_bucket").isin(only_buckets))
 
-    df = salted_repartition(df, n_buckets, salt)
+    width = exchange_width(df, n_buckets, salt)
+    df = salted_repartition(df, n_buckets, salt, width)
     # the sort leads with part_bucket so FileFormatWriter's required
     # ordering (partition columns first) is already satisfied — otherwise
     # the writer inserts its own part_bucket-only sort, which is not
@@ -182,4 +225,4 @@ def run_extract_job(
         catalog.append_lineage(lineage, out_root)
         input_rows = sum(r[1] for r in lineage_rows)
     return RunStats(run_id, [r[0] for r in lineage_rows], skipped,
-                    input_rows, time.time() - t0)
+                    input_rows, time.time() - t0, width)

@@ -39,9 +39,16 @@ DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
         "path": "warehouse",           # database.path analog
     },
     "job": {
+        # resume/lineage granularity; the output is partitioned by bucket
         "n_buckets": 32,
+        # skew insurance: a bucket may spread over up to `salt` extract
+        # tasks. n_buckets × salt caps the exchange width, which otherwise
+        # follows the input (plans/pipeline.py TASK_TARGET_BYTES) and is
+        # at least the session's defaultParallelism
         "salt": 4,
-        "shuffle_partitions": None,    # None → session default
+        # spark.sql.shuffle.partitions, for exchanges other than the
+        # extraction exchange; None → session default
+        "shuffle_partitions": None,
         "arrow_batch_rows": 1024,      # batch.chunk_size analog (C3)
         "resume": True,
     },

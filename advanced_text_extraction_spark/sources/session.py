@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local-mode testing stands in for the multi-executor cluster (BASELINE.md):
-the same job runs at local[4] vs local[16] for the scaling-efficiency
-evidence (the largest 4x core step inside this VM's ~16 physical cores —
-BENCH/BASELINE.md documents the calibration). On a real cluster the identical builder applies — only master,
-memory, and the Iceberg catalog packages change (see sources/catalog.py).
+Local-mode testing stands in for the multi-executor cluster: with no
+``master`` the session runs ``local[N]`` over the cores this process may
+use (``SPARK_GRAFT_CPUS`` overrides N), and the driver heap is sized from
+the host's memory (``SPARK_DRIVER_MEM`` overrides it). On a real cluster
+the identical builder applies — only master, memory, and the Iceberg
+catalog packages change (see sources/catalog.py).
 """
 
 from __future__ import annotations
@@ -12,6 +13,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Upper bound of the default driver heap, well below the ~32 GiB at
+# which the JVM stops compressing object pointers.
+MAX_DRIVER_MEMORY_GB = 24
+
+
+def default_driver_memory() -> str:
+    """Half the host's memory (MemTotal), in whole GiB, between 1g and
+    ``MAX_DRIVER_MEMORY_GB``: in local mode the JVM shares the host with
+    the Python workers, the page cache and the shuffle files."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f
+                   if line.startswith("MemTotal:"))
+    return f"{min(MAX_DRIVER_MEMORY_GB, max(1, kib // 2**21))}g"
 
 
 def build_session(
@@ -21,7 +36,8 @@ def build_session(
     arrow_batch_rows: int = 1024,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     n_threads = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
     shuffle_partitions = shuffle_partitions or max(n_threads, 8)
@@ -41,7 +57,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         # idempotent per-partition overwrite (reference J2 upsert analog)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # e.g. -XX:ActiveProcessorCount=N for CPU-budget-pinned runs
         # (bench scaling mode) — how a cgroup-aware JVM behaves under a
         # container CPU limit on a real cluster

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.extract import extract
+from ..worker import bootstrap_worker
 
 TRANSCRIPT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), True),
@@ -163,6 +164,7 @@ def sessionize_conversations(stream: DataFrame,
     import pandas as pd  # noqa: F401 (worker-side import)
 
     def fn(key, pdfs, state):
+        bootstrap_worker()
         import pandas as pd
         from datetime import datetime, timezone
 

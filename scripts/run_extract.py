@@ -104,6 +104,7 @@ def main(argv: list[str] | None = None) -> int:
             "input_rows": stats.input_rows,
             "buckets_done": stats.buckets_done,
             "buckets_skipped": stats.buckets_skipped,
+            "extract_tasks": stats.extract_tasks,
             "wall_sec": round(stats.wall_sec, 3),
             "turns_per_sec": round(stats.input_rows / stats.wall_sec, 1)
             if stats.wall_sec else None,

@@ -132,7 +132,8 @@ def test_partial_config_section_does_not_crash(tmp_path, monkeypatch):
         calls.update(kw)
         from types import SimpleNamespace
         return SimpleNamespace(run_id="t", input_rows=0, buckets_done=0,
-                               buckets_skipped=0, wall_sec=0.0)
+                               buckets_skipped=0, wall_sec=0.0,
+                               extract_tasks=0)
 
     class _Read:
         def parquet(self, p):
@@ -621,7 +622,8 @@ def test_config_extract_and_ocr_keys_are_wired(tmp_path, monkeypatch):
         calls.update(kw)
         from types import SimpleNamespace
         return SimpleNamespace(run_id="t", input_rows=0, buckets_done=0,
-                               buckets_skipped=0, wall_sec=0.0)
+                               buckets_skipped=0, wall_sec=0.0,
+                               extract_tasks=0)
 
     class _Read:
         def parquet(self, p):
