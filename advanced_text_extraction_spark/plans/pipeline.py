@@ -11,7 +11,8 @@
                                                exact because copies are
                                                co-located; Arrow-vectorized]
       → sortWithinPartitions(conv_id, turn)   [W3 — stable order, no global sort]
-      → overwrite extracted/ per bucket + append lineage/
+      → overwrite extracted/ per bucket
+    then, on the driver: append ONE lineage/ file per run (no Spark job)
 
 Scale design notes (10^12 turns, 1000 executors):
 - The ONLY shuffle is the salted repartition; everything else is
@@ -35,6 +36,10 @@ Scale design notes (10^12 turns, 1000 executors):
   exchange width never enters the bucket keying or the output layout.
 - Writes are per-bucket parquet dirs → on Iceberg, per-partition
   commits; bucket count scales with cluster size, not data size.
+- Lineage is one driver-side parquet file per run (≤ n_buckets rows
+  already on the driver), committed by rename — on Iceberg, one metadata
+  commit. Writing it through Spark would run a job whose local rows ship
+  through a second pool of Python workers.
 """
 
 from __future__ import annotations
@@ -42,7 +47,9 @@ from __future__ import annotations
 import math
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -207,22 +214,17 @@ def run_extract_job(
         for b, (rows_in, kept, raw_bytes, errors, wall_us)
         in sorted(acc.items())
     ]
-    input_rows = 0
     if lineage_rows:
-        lineage = spark.createDataFrame(
-            lineage_rows,
-            "part_bucket int, input_rows long, input_bytes long, "
-            "output_rows long, error_rows long, wall_ms long",
-        ).withColumns({
-            # n_buckets keys the resume probe: buckets computed under a
-            # DIFFERENT bucketing are semantically unrelated partitions
-            # and must not be skipped (pmod(h,8) != pmod(h,32))
-            "n_buckets": F.lit(n_buckets),
-            "extractor_version": F.lit(EXTRACTOR_VERSION),
-            "run_id": F.lit(run_id),
-            "finished_ts": F.current_timestamp(),
-        })
-        catalog.append_lineage(lineage, out_root)
-        input_rows = sum(r[1] for r in lineage_rows)
+        # n_buckets keys the resume probe: buckets computed under a
+        # DIFFERENT bucketing are semantically unrelated partitions and
+        # must not be skipped (pmod(h,8) != pmod(h,32))
+        run_cols = (n_buckets, EXTRACTOR_VERSION, run_id,
+                    datetime.now(timezone.utc))
+        names = catalog.LINEAGE_SCHEMA.names
+        lineage = pa.Table.from_pylist(
+            [dict(zip(names, r + run_cols)) for r in lineage_rows],
+            catalog.LINEAGE_SCHEMA)
+        catalog.append_lineage(spark, lineage, out_root)
     return RunStats(run_id, [r[0] for r in lineage_rows], skipped,
-                    input_rows, time.time() - t0, width)
+                    sum(r[1] for r in lineage_rows), time.time() - t0,
+                    width)

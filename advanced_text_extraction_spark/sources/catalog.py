@@ -12,6 +12,10 @@ Replaces the reference's SQLite cache table
   drives idempotent checkpoint resume via completed-bucket skip, the Spark
   analog of the reference's md5-keyed cache probe
   (/root/reference/text_extractor.py:842-847,1041-1074).
+  A run's lineage rows are already on the driver, so they are written
+  from there as ONE parquet file per run, committed by renaming a hidden
+  temp file — no Spark job and no Python worker pool. On Iceberg the
+  analog is one metadata commit (an append snapshot) per run.
 
 The sandbox ships no Iceberg runtime jar, so the default engine is plain
 Parquet with dynamic partition overwrite — semantics are identical for
@@ -21,9 +25,29 @@ this job because the write unit IS the partition.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# The lineage file schema, field for field what a Spark DataFrame write
+# of these rows produces, so files of both origins read as one table: the
+# run-constant columns are non-null; Spark rejects nanosecond timestamps,
+# so finished_ts is microseconds, UTC-adjusted.
+LINEAGE_SCHEMA = pa.schema([
+    ("part_bucket", pa.int32()),
+    ("input_rows", pa.int64()),
+    ("input_bytes", pa.int64()),
+    ("output_rows", pa.int64()),
+    ("error_rows", pa.int64()),
+    ("wall_ms", pa.int64()),
+    pa.field("n_buckets", pa.int32(), nullable=False),
+    pa.field("extractor_version", pa.string(), nullable=False),
+    pa.field("run_id", pa.string(), nullable=False),
+    pa.field("finished_ts", pa.timestamp("us", tz="UTC"), nullable=False),
+])
 
 
 def extracted_path(root: str) -> str:
@@ -44,8 +68,27 @@ def write_extracted(df: DataFrame, root: str) -> None:
     )
 
 
-def append_lineage(df: DataFrame, root: str) -> None:
-    df.write.mode("append").parquet(lineage_path(root))
+def append_lineage(spark: SparkSession, table: pa.Table, root: str) -> None:
+    """Append one run's lineage rows (a :data:`LINEAGE_SCHEMA` table) as
+    ONE parquet file, written from the driver through the session's
+    Hadoop FileSystem — every scheme the warehouse can live on, and no
+    Spark job. The file is written under a hidden name and renamed into
+    place, so a crash leaves at worst a ``.``-prefixed orphan, which
+    Spark and pyarrow readers both skip."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    fs, final = _hadoop_path(spark, os.path.join(lineage_path(root), name))
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(final.getParent(),
+                                               f".{name}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        raise OSError(f"append_lineage: could not rename {tmp} to {final}")
 
 
 def read_extracted(spark: SparkSession, root: str) -> DataFrame:
@@ -70,7 +113,6 @@ def bucket_row_counts(root: str,
     Filesystem access goes through ``pyarrow.fs.FileSystem.from_uri`` so
     the same code reads footers on ``file://``, ``s3://``, ``hdfs://`` …
     warehouses (r1 flagged the old ``os.listdir`` as local-FS-only)."""
-    import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     base = extracted_path(root)
@@ -114,14 +156,18 @@ def bucket_row_counts(root: str,
     return counts
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FileSystem
+    API — resolves the path's scheme (file://, hdfs://, s3a://, …)
+    against the session's Hadoop conf, so resume and lineage work on any
+    warehouse a real cluster mounts (r1 flagged the old
+    ``os.path.exists`` as local-FS-only)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — resolves the
-    path's scheme (file://, hdfs://, s3a://, …) against the session's
-    Hadoop conf, so resume works on any warehouse a real cluster mounts
-    (r1 flagged the old ``os.path.exists`` as local-FS-only)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -141,8 +187,7 @@ def completed_buckets(spark: SparkSession, root: str,
 
     Lineage is tiny (one row per bucket per run) — collecting the bucket
     ids to the driver gives Catalyst a partition-pruning ``NOT IN`` filter
-    on the scan, strictly cheaper than the row-level anti-join
-    (which remains available via :func:`resume_anti_join`).
+    on the scan, strictly cheaper than a row-level anti-join.
     """
     path = lineage_path(root)
     if not _fs_exists(spark, path):  # Iceberg: catalog.tableExists
@@ -169,26 +214,3 @@ def completed_buckets(spark: SparkSession, root: str,
         done = done.filter(F.col("n_buckets") == n_buckets)
     rows = done.select("part_bucket").distinct().collect()
     return sorted(r[0] for r in rows)
-
-
-def resume_anti_join(df: DataFrame, spark: SparkSession, root: str,
-                     extractor_version: str,
-                     n_buckets: int | None = None) -> DataFrame:
-    """Row-level variant of the resume filter (SURVEY §2.5 J1): broadcast
-    LEFT ANTI JOIN against lineage — used when buckets can be partially
-    written (e.g. streaming backfill), at the cost of a broadcast.
-    Keyed on n_buckets like :func:`completed_buckets` — bucket ids from
-    a different bucketing never match."""
-    if not _fs_exists(spark, lineage_path(root)):
-        return df
-    # mergeSchema for the same reason as completed_buckets: one legacy
-    # file must not hide n_buckets from the whole table
-    lineage = spark.read.option("mergeSchema", "true") \
-        .parquet(lineage_path(root))
-    done = lineage.filter(F.col("extractor_version") == extractor_version)
-    if n_buckets is not None:
-        if "n_buckets" not in lineage.columns:
-            return df  # legacy lineage: never skip on unverifiable rows
-        done = done.filter(F.col("n_buckets") == n_buckets)
-    return df.join(F.broadcast(done.select("part_bucket").distinct()),
-                   "part_bucket", "left_anti")

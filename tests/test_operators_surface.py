@@ -1,8 +1,7 @@
 """Direct tests for module surface flagged untested in VERDICT r1 #7:
-``with_confidence_filter`` (P6), ``history_top_n`` (W2 module twin),
-``resume_anti_join`` (J1 row-level variant) — plus the r2 scale levers in
-``similarity`` (parameterized n_bits, multi-band recall union,
-recommended_n_bits sizing)."""
+``with_confidence_filter`` (P6), ``history_top_n`` (W2 module twin) —
+plus the r2 scale levers in ``similarity`` (parameterized n_bits,
+multi-band recall union, recommended_n_bits sizing)."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from pyspark.sql import functions as F
 
 from advanced_text_extraction_spark.operators import similarity as S
 from advanced_text_extraction_spark.operators.extract import (
-    EXTRACTOR_VERSION,
     extract,
     with_confidence_filter,
 )
@@ -56,29 +54,8 @@ def test_history_top_n(spark):
 
 
 # ---------------------------------------------------------------------------
-# J1 — row-level resume anti-join
+# lineage from the extraction pass and the parquet footers
 # ---------------------------------------------------------------------------
-
-def test_resume_anti_join(spark, transcripts_path, tmp_path):
-    from advanced_text_extraction_spark.plans.pipeline import prepare
-
-    root = str(tmp_path / "wh")
-    df = spark.read.parquet(transcripts_path)
-    # before any lineage exists: passthrough
-    pre = prepare(df, n_buckets=4)
-    assert catalog.resume_anti_join(pre, spark, root,
-                                    EXTRACTOR_VERSION).count() == pre.count()
-    # complete buckets {0, 1}; the anti-join must drop exactly those rows
-    run_extract_job(spark, df, root, n_buckets=4, salt=2,
-                    only_buckets=[0, 1])
-    remaining = catalog.resume_anti_join(pre, spark, root, EXTRACTOR_VERSION)
-    expect = pre.filter(~F.col("part_bucket").isin([0, 1]))
-    assert remaining.count() == expect.count()
-    assert remaining.filter(F.col("part_bucket").isin([0, 1])).count() == 0
-    # a different extractor version sees no completed work
-    assert catalog.resume_anti_join(pre, spark, root,
-                                    "other/9.9").count() == pre.count()
-
 
 def test_lineage_without_output_rescan(spark, transcripts_path, tmp_path):
     """Lineage values come from the extraction pass + parquet footers —
