@@ -16,6 +16,7 @@ intrinsic, same as any vectorized string kernel).
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.accumulators import AccumulatorParam
@@ -34,23 +35,8 @@ from ..worker import bootstrap_worker
 EXTRACTOR_VERSION = "ate-spark/0.1"
 MAX_PAYLOAD_CHARS = 2_000_000
 
-# P3 OCR-fallback extension point (reference text_extractor.py:501-507,
-# 575-610): when a PDF's text layer fails the >50-char gate the reference
-# re-renders pages and OCRs them. No OCR engine ships in this sandbox, so
-# the hook is None by default — the gate result is still recorded in
-# metadata['text_layer'] and a deployment with an OCR engine registers
-# `ocr_fallback = fn(pdf_bytes) -> (text, confidence)`; per-worker lazy
-# engine init belongs inside fn (reference eager-init analog :315-325).
-ocr_fallback = None
-# Engine name the kernel last armed IN THIS PROCESS ("" = never armed by
-# a kernel). Spark reuses Python workers across jobs by default
-# (spark.python.worker.reuse), so module state outlives a job — the
-# kernel re-arms (or disarms) whenever its engine setting differs from
-# what this process last armed, instead of a sticky install-once guard
-# that would let job A's engine leak into job B.
-# (engine, preprocess, confidence_threshold) tuple, None (disarmed), or
-# "" = never armed by a kernel in this process
-_armed_engine: tuple | None | str = ""
+# The P3 scanned-PDF fallback: pdf_bytes -> (text, confidence).
+OcrFallback = Callable[[bytes], tuple[str, float]]
 
 SPAN_TYPE = T.ArrayType(
     T.StructType([
@@ -89,9 +75,14 @@ def _span_dicts(spans) -> list[dict]:
 
 
 def extract_one(payload: str | None,
-                max_chars: int = MAX_PAYLOAD_CHARS) -> dict:
+                max_chars: int = MAX_PAYLOAD_CHARS,
+                ocr: OcrFallback | None = None) -> dict:
     """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch).
-    ``max_chars`` is the config extract.max_payload_chars cap."""
+    ``max_chars`` is the config extract.max_payload_chars cap. ``ocr`` is
+    the P3 fallback (reference text_extractor.py:501-507,575-610): a PDF
+    whose text layer fails the >50-char gate is handed to it as bytes; an
+    exception it raises is recorded in metadata['ocr_error'] and the
+    short text layer is kept (see ``operators.ocr.pdf_ocr_fallback``)."""
     raw = payload or ""
     truncated = len(raw) > max_chars
     if truncated:
@@ -111,14 +102,14 @@ def extract_one(payload: str | None,
                 text, spans, gate, n_pages = extract_pdf(payload_bytes)
                 meta["text_layer"] = gate
                 meta["n_pages"] = str(n_pages)
-                if gate == "short" and ocr_fallback is not None:
+                if gate == "short" and ocr is not None:
                     # reference P3: text layer too short → OCR the pages
                     # (text_extractor.py:501-507); engine-reported mean
                     # confidence replaces the 0.95 constant (A6/A7).
                     # OCR failure keeps the (valid) short text layer —
                     # a fallback must never lose what it falls back FROM.
                     try:
-                        ocr_text, ocr_conf = ocr_fallback(payload_bytes)
+                        ocr_text, ocr_conf = ocr(payload_bytes)
                     except Exception as ocr_exc:
                         meta["ocr_error"] = (str(ocr_exc)
                                              or type(ocr_exc).__name__)
@@ -194,9 +185,7 @@ def _norm_key(key: tuple) -> tuple:
 
 def _make_kernel(dedupe_keys: tuple[str, ...] | None,
                  stats_acc=None, bucket_col: str = "part_bucket",
-                 ocr_fallback_engine: str | None = None,
-                 ocr_preprocess: bool = True,
-                 ocr_confidence_threshold: float = 0.0,
+                 ocr: OcrFallback | None = None,
                  max_payload_chars: int = MAX_PAYLOAD_CHARS):
     """Build the mapInPandas kernel, optionally deduplicating on
     ``dedupe_keys`` WITHIN the partition (first copy wins).
@@ -218,39 +207,6 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
 
     def _extract_batches(batches):
         bootstrap_worker()
-        # Arm the P3 OCR hook IN THIS PROCESS: the kernel runs in Spark's
-        # Python workers, so a driver-side install_pdf_ocr_fallback()
-        # call would only set the driver's module global. The engine name
-        # is a plain string, so the closure stays picklable. Workers are
-        # REUSED across jobs — arm/disarm on engine change, never
-        # install-once (a sticky install would leak job A's engine, or a
-        # disabled=None setting, into job B on reused workers while fresh
-        # workers obey the new setting — nondeterministic per-row
-        # behavior within one job).
-        #
-        # The armed-state MUST be read through an explicit module import,
-        # not a `global` reference: cloudpickle ships a nested closure's
-        # referenced globals BY VALUE, so a `global _armed_engine` here
-        # would compare the DRIVER's value (e.g. set by a driver-side
-        # install call) instead of this worker process's — skipping the
-        # arm step on fresh workers. Modules pickle by reference, so the
-        # attribute lookup below always hits the executing process's
-        # real state.
-        from advanced_text_extraction_spark.operators import (
-            extract as _self)
-        armed_key = (None if ocr_fallback_engine is None else
-                     (ocr_fallback_engine, ocr_preprocess,
-                      ocr_confidence_threshold))
-        if _self._armed_engine != armed_key:
-            if ocr_fallback_engine is None:
-                _self.ocr_fallback = None
-                _self._armed_engine = None
-            else:
-                from .ocr import install_pdf_ocr_fallback
-                install_pdf_ocr_fallback(
-                    engine=ocr_fallback_engine,
-                    preprocess=ocr_preprocess,
-                    confidence_threshold=ocr_confidence_threshold)
         seen: set | None = set() if dedupe_keys else None
         for pdf in batches:
             if stats_acc is not None and bucket_col in pdf.columns:
@@ -281,7 +237,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
             clock = time.perf_counter_ns
             for payload in pdf["text"]:
                 t0 = clock()
-                recs.append(extract_one(payload, max_payload_chars))
+                recs.append(extract_one(payload, max_payload_chars, ocr))
                 row_us.append((clock() - t0) // 1000)
             out = pdf.copy()
             for col in ("content_type", "extracted_text", "spans",
@@ -305,9 +261,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
 def extract(df: DataFrame,
             dedupe_keys: tuple[str, ...] | None = None,
             stats_acc=None, bucket_col: str = "part_bucket",
-            ocr_fallback_engine: str | None = None,
-            ocr_preprocess: bool = True,
-            ocr_confidence_threshold: float = 0.0,
+            ocr: OcrFallback | None = None,
             max_payload_chars: int = MAX_PAYLOAD_CHARS) -> DataFrame:
     """Apply the extraction dispatch over a transcripts DataFrame.
 
@@ -318,23 +272,20 @@ def extract(df: DataFrame,
     only exact when copies are co-located by the upstream exchange).
     ``stats_acc`` (see :func:`new_stats_accumulator`) collects per-bucket
     lineage stats as a side output of the extraction pass.
-    ``ocr_fallback_engine`` (e.g. ``'auto'``/``'template'``) arms the P3
-    scanned-PDF OCR fallback inside each Python worker (SPEC §4/§4c) —
-    the worker-safe form of ``operators.ocr.install_pdf_ocr_fallback``;
-    ``ocr_preprocess`` and ``ocr_confidence_threshold`` are the config
-    ocr.preprocess / extract.confidence_threshold knobs (a below-threshold
-    OCR result is rejected and the short text layer kept);
+    ``ocr`` is the P3 scanned-PDF OCR fallback passed to every
+    ``extract_one`` call (SPEC §3 step 6, §4c); ``None`` keeps the short
+    text layer. It ships to the workers inside the kernel closure, so it
+    must pickle — bind engine settings with ``functools.partial`` over
+    ``operators.ocr.pdf_ocr_fallback``, which pickles by reference.
     ``max_payload_chars`` is the config extract.max_payload_chars cap."""
     return df.mapInPandas(_make_kernel(dedupe_keys, stats_acc, bucket_col,
-                                       ocr_fallback_engine, ocr_preprocess,
-                                       ocr_confidence_threshold,
-                                       max_payload_chars),
+                                       ocr, max_payload_chars),
                           schema=output_schema(df.schema))
 
 
 def new_stats_accumulator(spark):
-    """Per-bucket lineage-stats accumulator: {bucket: (rows, raw_bytes,
-    errors, wall_us)}. Values are exact for a successfully completed write
+    """Per-bucket lineage-stats accumulator: {bucket: (input_rows,
+    kept_rows, raw_bytes, errors, wall_us)} (see BucketStatsParam). Values are exact for a successfully completed write
     (one task attempt per partition commits); a re-executed stage could
     double-count, so authoritative *row counts* come from parquet footers
     (sources/catalog.bucket_row_counts) and the accumulator supplies the

@@ -44,6 +44,7 @@ Scale design notes (10^12 turns, 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import math
 import time
 from dataclasses import dataclass
@@ -188,11 +189,17 @@ def run_extract_job(
     # re-store the whole input corpus: double the parquet encode CPU and
     # write volume for a column every consumer already has upstream
     from ..operators.extract import MAX_PAYLOAD_CHARS
+    ocr = None
+    if ocr_fallback_engine is not None:
+        # imported only for a job that OCRs: kernels.ocr stays off the
+        # import path of fallback-free jobs on driver and workers alike
+        from ..operators.ocr import pdf_ocr_fallback
+        ocr = functools.partial(
+            pdf_ocr_fallback, engine=ocr_fallback_engine,
+            preprocess=ocr_preprocess,
+            confidence_threshold=ocr_confidence_threshold)
     extracted = extract(df, dedupe_keys=("conv_id", "turn_idx"),
-                        stats_acc=stats_acc,
-                        ocr_fallback_engine=ocr_fallback_engine,
-                        ocr_preprocess=ocr_preprocess,
-                        ocr_confidence_threshold=ocr_confidence_threshold,
+                        stats_acc=stats_acc, ocr=ocr,
                         max_payload_chars=(max_payload_chars
                                            or MAX_PAYLOAD_CHARS)) \
         .drop("text") \

@@ -51,19 +51,14 @@ def main() -> int:
         cal_pre = round(bench._calibrate(24), 1)
         out = os.path.join(td, "wh")
         cpus = bench.CPUS
-        stats = bench._run_job_unpinned(inp, out, f"local[{cpus}]", cpus) \
-            if hasattr(bench, "_run_job_unpinned") else None
-        if stats is None:
-            # no unpinned helper in bench.py: run the job directly
-            proc = subprocess.run(
-                [sys.executable, os.path.join(REPO, "scripts",
-                                              "run_extract.py"),
-                 "--input", inp, "--output", out,
-                 "--master", f"local[{cpus}]", "--no-resume", "--warmup",
-                 "--shuffle-partitions", "128", "--salt", "16"],
-                capture_output=True, text=True, check=True, timeout=3600,
-                env=bench._subproc_env(f"local[{cpus}]"), cwd=REPO)
-            stats = json.loads(proc.stdout.strip().splitlines()[-1])
+        proc = subprocess.run(
+            [sys.executable, os.path.join(REPO, "scripts", "run_extract.py"),
+             "--input", inp, "--output", out,
+             "--master", f"local[{cpus}]", "--no-resume", "--warmup",
+             "--shuffle-partitions", "128", "--salt", "16"],
+            capture_output=True, text=True, check=True, timeout=3600,
+            env=bench._subproc_env(f"local[{cpus}]"), cwd=REPO)
+        stats = json.loads(proc.stdout.strip().splitlines()[-1])
         # resume probe at this scale: the finished job must noop fast
         t1 = time.time()
         proc = subprocess.run(

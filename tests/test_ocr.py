@@ -3,6 +3,7 @@ scanned-PDF fallback (SURVEY §2.10 — implemented in r2 via the
 from-scratch numpy engine; reference text_extractor.py:152-488)."""
 
 import base64
+import functools
 import random
 
 import numpy as np
@@ -22,7 +23,7 @@ from advanced_text_extraction_spark.kernels.pdf_extract import (
     extract_page_images, extract_pdf)
 from advanced_text_extraction_spark.operators import extract as extract_mod
 from advanced_text_extraction_spark.operators.ocr import (
-    install_pdf_ocr_fallback, ocr_images, ocr_pdf_bytes, ocr_roundtrip,
+    ocr_images, ocr_pdf_bytes, ocr_roundtrip, pdf_ocr_fallback,
     pdf_ocr_pages, page_confidence_stats, token_confidence_stats)
 from fixtures.gen import build_scanned_pdf, gen_scanned_pdf_payload
 
@@ -252,8 +253,7 @@ def test_scanned_pdf_page_images_and_ocr():
     assert gate == "short" and n_pages == 2
 
 
-def test_extract_one_ocr_fallback(monkeypatch):
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
+def test_extract_one_ocr_fallback():
     rng = random.Random(11)
     payload, expected = gen_scanned_pdf_payload(rng)
     # without the hook: short text layer, empty text
@@ -261,25 +261,19 @@ def test_extract_one_ocr_fallback(monkeypatch):
     assert rec["metadata"]["text_layer"] == "short"
     assert rec["extracted_text"].strip() == ""  # '\n\n' page joins only
     # with the hook: OCR text replaces it, engine confidence replaces 0.95
-    install_pdf_ocr_fallback()
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(payload, ocr=pdf_ocr_fallback)
     assert rec["metadata"]["text_layer"] == "ocr"
     assert rec["extracted_text"] == expected
     assert 0.5 < rec["confidence"] <= 1.0
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
 
 
 def test_text_layer_pdf_unaffected_by_fallback():
     rng = random.Random(5)
     from fixtures.gen import gen_pdf_payload
-    install_pdf_ocr_fallback()
-    try:
-        payload = gen_pdf_payload(rng)
-        rec = extract_mod.extract_one(payload)
-        assert rec["metadata"]["text_layer"] == "ok"
-        assert rec["confidence"] == 0.95
-    finally:
-        extract_mod.ocr_fallback = None
+    payload = gen_pdf_payload(rng)
+    rec = extract_mod.extract_one(payload, ocr=pdf_ocr_fallback)
+    assert rec["metadata"]["text_layer"] == "ok"
+    assert rec["confidence"] == 0.95
 
 
 # ---------------------------------------------------------------------------
@@ -344,10 +338,10 @@ def test_ocr_roundtrip_operator(spark):
 
 
 def test_ocr_fallback_arms_inside_spark_workers(spark):
-    """Regression: the P3 hook must arm in the Python WORKERS, not just
-    the driver — a driver-side install_pdf_ocr_fallback() sets only the
-    driver's module global, and workers import the module fresh. The
-    picklable ocr_fallback_engine spec re-installs per worker."""
+    """Regression: the P3 fallback must run in the Python WORKERS, not
+    just the driver. The bound fallback passed as ``ocr=`` ships inside
+    the kernel closure (a functools.partial over pdf_ocr_fallback pickles
+    by reference), so every worker applies it."""
     rng = random.Random(23)
     payload, expected = gen_scanned_pdf_payload(rng)
     rows = [("c", 0, "user", payload, None, None),
@@ -361,9 +355,9 @@ def test_ocr_fallback_arms_inside_spark_workers(spark):
     out0 = {r.turn_idx: r for r in extract(df).collect()}
     assert out0[0].metadata["text_layer"] == "short"
     assert out0[0].extracted_text.strip() == ""
-    # armed via the worker-safe engine spec
-    out = {r.turn_idx: r
-           for r in extract(df, ocr_fallback_engine="template").collect()}
+    # armed via the bound fallback the job passes
+    fallback = functools.partial(pdf_ocr_fallback, engine="template")
+    out = {r.turn_idx: r for r in extract(df, ocr=fallback).collect()}
     assert out[0].metadata["text_layer"] == "ocr"
     assert out[0].extracted_text == expected
     assert 0.5 < out[0].confidence <= 1.0
@@ -371,30 +365,84 @@ def test_ocr_fallback_arms_inside_spark_workers(spark):
 
 
 def test_arming_ignores_leaked_driver_state(spark):
-    """Regression: a driver-side install_pdf_ocr_fallback() marks the
-    DRIVER's module as armed; cloudpickle ships a closure's referenced
-    globals by value, so a `global`-based guard in the kernel would see
-    the driver's armed-state, conclude 'already armed', and skip arming
-    in a worker whose real module state is unarmed. The kernel must read
-    armed-state through the worker's imported module instead."""
+    """Regression: a fallback the driver used never reaches a job that
+    did not pass one. The fallback is an argument captured in the
+    kernel closure, not process state, so whatever the driver did with
+    one leaves a fallback-free job on its short text layer — and a job
+    that passes one still OCRs."""
     rng = random.Random(29)
     payload, expected = gen_scanned_pdf_payload(rng)
-    # poison the driver: armed-state set, hook reset (the shape any
-    # driver-side install + cleanup leaves behind)
-    install_pdf_ocr_fallback(engine="template")
-    extract_mod.ocr_fallback = None
-    try:
-        df = spark.createDataFrame(
-            [("c", 0, "user", payload, None, None)],
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp")
-        from advanced_text_extraction_spark.operators.extract import extract
-        out = extract(df, ocr_fallback_engine="template").collect()
-        assert out[0].metadata["text_layer"] == "ocr"
-        assert out[0].extracted_text == expected
-    finally:
-        extract_mod._armed_engine = ""
-        extract_mod.ocr_fallback = None
+    fallback = functools.partial(pdf_ocr_fallback, engine="template")
+    # use the fallback on the driver first
+    assert extract_mod.extract_one(
+        payload, ocr=fallback)["metadata"]["text_layer"] == "ocr"
+    df = spark.createDataFrame(
+        [("c", 0, "user", payload, None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    from advanced_text_extraction_spark.operators.extract import extract
+    out = extract(df).collect()
+    assert out[0].metadata["text_layer"] == "short"
+    out = extract(df, ocr=fallback).collect()
+    assert out[0].metadata["text_layer"] == "ocr"
+    assert out[0].extracted_text == expected
+
+
+def test_fallback_isolated_across_jobs_on_reused_workers(spark):
+    """Spark reuses Python workers across jobs, so nothing one job's
+    fallback does may outlive that job: over the same two-partition
+    frame in one session, OCR on → off → on with an impossible
+    threshold must each follow only the job's own ``ocr`` argument."""
+    rng = random.Random(37)
+    payloads = [gen_scanned_pdf_payload(rng) for _ in range(2)]
+    df = spark.createDataFrame(
+        [("c", i, "user", p, None, None)
+         for i, (p, _expected) in enumerate(payloads)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp").repartition(2)
+    from advanced_text_extraction_spark.operators.extract import extract
+
+    def run(ocr):
+        return sorted(extract(df, ocr=ocr).collect(),
+                      key=lambda r: r.turn_idx)
+
+    template = functools.partial(pdf_ocr_fallback, engine="template")
+    out = run(template)
+    assert [r.metadata["text_layer"] for r in out] == ["ocr", "ocr"]
+    assert [r.extracted_text for r in out] == [e for _p, e in payloads]
+    out = run(None)
+    assert [r.metadata["text_layer"] for r in out] == ["short", "short"]
+    assert all("ocr_error" not in r.metadata for r in out)
+    out = run(functools.partial(template, confidence_threshold=2.0))
+    assert [r.metadata["text_layer"] for r in out] == ["short", "short"]
+    assert all("below threshold" in r.metadata["ocr_error"] for r in out)
+
+
+def test_fallback_free_kernel_leaves_ocr_engine_unimported():
+    """A worker imports the OCR engine only to unpickle a bound fallback:
+    the kernel of a job that passes none must not drag kernels.ocr in."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from advanced_text_extraction_spark.operators.extract import _make_kernel
+    probe = ("import pickle, sys; pickle.loads(sys.stdin.buffer.read()); "
+             "print('advanced_text_extraction_spark.kernels.ocr' "
+             "in sys.modules)")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def unpickle_imports_ocr(ocr):
+        out = subprocess.run(
+            [sys.executable, "-c", probe], cwd=root, check=True,
+            input=cloudpickle.dumps(_make_kernel(None, ocr=ocr)),
+            capture_output=True)
+        return out.stdout.strip() == b"True"
+
+    assert not unpickle_imports_ocr(None)
+    assert unpickle_imports_ocr(
+        functools.partial(pdf_ocr_fallback, engine="template"))
 
 
 def test_run_extract_job_ocr_fallback(spark, tmp_path):
@@ -551,16 +599,14 @@ def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
     carry the PDF OCR fallback with zero code changes."""
     from advanced_text_extraction_spark.kernels import ocr as K
 
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
-    monkeypatch.setattr(extract_mod, "_armed_engine", None)
     monkeypatch.setitem(
         K.ENGINES, "tesseract",
         lambda img: ("PLUGGED PAGE TEXT", 0.88, [88.0, 87.0]))
 
     rng = random.Random(11)
     payload, _expected = gen_scanned_pdf_payload(rng)
-    install_pdf_ocr_fallback(engine="tesseract")
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(
+        payload, ocr=functools.partial(pdf_ocr_fallback, engine="tesseract"))
     assert rec["metadata"]["text_layer"] == "ocr"
     assert "PLUGGED PAGE TEXT" in rec["extracted_text"]
     assert rec["confidence"] == pytest.approx(0.88)
@@ -569,8 +615,9 @@ def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
     # keeps the short-but-valid text layer, recording the rejection
     monkeypatch.setitem(K.ENGINES, "tesseract",
                         lambda img: ("LOW CONF", 0.2, [20.0]))
-    install_pdf_ocr_fallback(engine="tesseract", confidence_threshold=0.5)
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(
+        payload, ocr=functools.partial(pdf_ocr_fallback, engine="tesseract",
+                                       confidence_threshold=0.5))
     assert rec["metadata"]["text_layer"] == "short"
     assert "ocr_error" in rec["metadata"]
 

@@ -71,12 +71,7 @@ def test_failing_ocr_fallback_keeps_short_text_layer():
     def exploding_fallback(pdf_bytes):
         raise ValueError("no raster decodable")
 
-    prev = extract_mod.ocr_fallback
-    extract_mod.ocr_fallback = exploding_fallback
-    try:
-        row = extract_mod.extract_one(payload)
-    finally:
-        extract_mod.ocr_fallback = prev
+    row = extract_mod.extract_one(payload, ocr=exploding_fallback)
     assert row["status"] == "ok"
     assert "tiny" in row["extracted_text"]
     assert row["metadata"]["text_layer"] == "short"
@@ -653,9 +648,10 @@ def test_config_extract_and_ocr_keys_are_wired(tmp_path, monkeypatch):
 
 
 def test_extract_one_max_chars_and_ocr_threshold_rejection():
+    import functools
+
     from advanced_text_extraction_spark.operators import extract as em
-    from advanced_text_extraction_spark.operators.ocr import (
-        install_pdf_ocr_fallback)
+    from advanced_text_extraction_spark.operators.ocr import pdf_ocr_fallback
 
     row = em.extract_one("word " * 100, max_chars=10)
     assert row["metadata"]["truncated"] == "true"
@@ -665,12 +661,8 @@ def test_extract_one_max_chars_and_ocr_threshold_rejection():
     # valid text layer is kept and the rejection lands in metadata
     short_pdf = build_pdf([["tiny"]], random.Random(3), flate=False)
     payload = base64.b64encode(short_pdf).decode()
-    prev_fb, prev_armed = em.ocr_fallback, em._armed_engine
-    install_pdf_ocr_fallback("template", confidence_threshold=2.0)
-    try:
-        row = em.extract_one(payload)
-    finally:
-        em.ocr_fallback, em._armed_engine = prev_fb, prev_armed
+    row = em.extract_one(payload, ocr=functools.partial(
+        pdf_ocr_fallback, engine="template", confidence_threshold=2.0))
     assert row["status"] == "ok"
     assert "tiny" in row["extracted_text"]
     assert "below threshold" in row["metadata"]["ocr_error"]
